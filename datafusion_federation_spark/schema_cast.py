@@ -45,6 +45,12 @@ def cast_dataframe(df: DataFrame, expected: T.StructType,
             f"column count mismatch: got {len(actual.fields)}, "
             f"expected {len(expected.fields)} "
             "(casting is positional, like the reference)")
+    if all(src.name == dst.name and src.dataType == dst.dataType
+           and not (fixed_size_lists and dst.name in fixed_size_lists)
+           for src, dst in zip(actual.fields, expected.fields)):
+        # already the declared schema: the rename and projection below
+        # would be two analysis round trips for an identity
+        return df
     # rename to unique positional names first: genuinely positional access
     # (a remote join result may carry duplicate column names, which
     # by-name F.col() cannot address)

@@ -204,6 +204,7 @@ class SQLProvider(FederationProvider):
         """
         from ..federation import apply_table_hooks
         from ..plans.nodes import RemoteQueryNode
+        from ..schema_infer import shape_key
         from ..unparser import Unparser
 
         plan, tables = apply_table_hooks(plan)
@@ -220,8 +221,11 @@ class SQLProvider(FederationProvider):
         # keyed by THIS provider object, not (name, context): two
         # same-identity providers over different databases (both
         # DuckDB ':memory:', say) must not share inferred schemas —
-        # a stale hit would make the cast layer corrupt values silently
-        cache_key = f"p{self._cache_token}|{base_sql}"
+        # a stale hit would make the cast layer corrupt values silently.
+        # The plan's shape, not base_sql, so fresh literals still hit.
+        shape = shape_key(plan)
+        cache_key = (None if shape is None
+                     else f"p{self._cache_token}|{shape}")
         return RemoteQueryNode(plan=plan, provider=self, sql=sql,
                                base_sql=base_sql,
                                schema=_expected_schema(plan, cache_key))

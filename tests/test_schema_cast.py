@@ -142,3 +142,28 @@ def test_cast_dataframe_duplicate_column_names(spark):
     ])
     rows = cast_dataframe(df, expected).collect()
     assert rows[0]["left_id"] == 1 and rows[0]["right_id"] == 2
+
+
+def test_matching_schema_is_returned_without_projection(spark):
+    # a result already in the declared names and types needs no cast:
+    # the frame comes back as is, with no rename or projection on top
+    df = spark.createDataFrame([(1, "a"), (2, None)], "a bigint, b string")
+    expected = T.StructType([
+        T.StructField("a", T.LongType()),
+        T.StructField("b", T.StringType()),
+    ])
+    out = cast_dataframe(df, expected)
+    assert out is df
+    assert out.schema == df.schema
+    assert sorted(out.collect()) == [(1, "a"), (2, None)]
+    # a name or type difference, or a fixed-size check, still projects
+    renamed = T.StructType([T.StructField("x", T.LongType()),
+                            T.StructField("b", T.StringType())])
+    assert cast_dataframe(df, renamed).columns == ["x", "b"]
+    arr = spark.createDataFrame([([1.0, 2.0, 3.0],)], "v array<double>")
+    out = cast_dataframe(arr, T.StructType(
+        [T.StructField("v", T.ArrayType(T.DoubleType()))]),
+        fixed_size_lists={"v": 2})
+    assert out is not arr
+    with pytest.raises(Exception, match="fixed-size"):
+        out.collect()
