@@ -117,7 +117,9 @@ class Compiler:
                 # universally (reference wraps EVERY VirtualExecutionPlan
                 # in SchemaCastScanExec — src/sql/mod.rs:143-161)
                 from .schema_infer import infer_plan_schema
-                schema = infer_plan_schema(self.spark, p.plan)
+                schema = infer_plan_schema(
+                    self.spark, p.plan,
+                    cache_key=p.provider.schema_cache_key(p.plan))
             df = p.provider.executor.execute(self.spark, sql,
                                              schema=schema)
             if schema is not None:
@@ -2932,13 +2934,10 @@ def _corr_to_spark(e: Expr, outer_df: DataFrame, sub_df: DataFrame,
 def _root_alias(p: Plan):
     """Alias at a plan's root, looking through wrap_projection's
     SELECT-* shell."""
+    from .federation import is_star_shell  # late: avoids module cycle
     if isinstance(p, SubqueryAlias):
         return p.alias
-    if (isinstance(p, Project) and len(p.projections) == 1
-            and isinstance(p.projections[0], Star)
-            and p.projections[0].table is None
-            and not p.projections[0].replace
-            and not p.projections[0].exclude):
+    if is_star_shell(p):
         return _root_alias(p.input)
     return None
 

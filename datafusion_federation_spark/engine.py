@@ -20,10 +20,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .compiler import Compiler
 from .expressions import (
-    AggFunc, Alias, Col, Cube, Expr, GroupingSets, Rollup, SortKey, Star,
+    AggFunc, Alias, Col, Cube, Expr, GroupingSets, Rollup, SortKey,
     _wrap, col, lit,
 )
-from .federation import federate
+from .federation import federate, is_star_shell
 from .plans.nodes import (
     Aggregate, Distinct, Filter, Join, Limit, Plan, Project, RemoteQueryNode,
     Scan, SetOp, Sort, SubqueryAlias, Union, Window, walk_plan,
@@ -320,11 +320,7 @@ class FederationEngine:
         """Look through wrap_projection's SELECT-* shell: a fully
         claimed plan is a RemoteQueryNode, possibly under Project(*)."""
         core = fed
-        while (isinstance(core, Project) and len(core.projections) == 1
-               and isinstance(core.projections[0], Star)
-               and core.projections[0].table is None
-               and not core.projections[0].replace
-               and not core.projections[0].exclude):
+        while is_star_shell(core):
             core = core.input
         return core
 

@@ -400,6 +400,17 @@ def wrap_projection(plan: Plan) -> Plan:
     return Project(plan, [Star()])
 
 
+def is_star_shell(plan: Plan) -> bool:
+    """Whether ``plan`` is a bare ``SELECT *`` projection, the shell
+    wrap_projection builds: it passes every input column through
+    unchanged."""
+    if not (isinstance(plan, Project) and len(plan.projections) == 1):
+        return False
+    star = plan.projections[0]
+    return (isinstance(star, Star) and star.table is None
+            and not star.replace and not star.exclude)
+
+
 # ---------------------------------------------------------------------------
 # per-table hook pipeline (reference src/sql/mod.rs:234-301)
 # ---------------------------------------------------------------------------

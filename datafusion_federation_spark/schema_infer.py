@@ -45,11 +45,12 @@ from typing import Any, Optional
 from .expressions import _UNBOUND, IntervalLit, Lit, Placeholder, SparkCol
 from .plans.nodes import RemoteQueryNode, Scan
 
-#: (applicationId, cache_key) -> StructType, oldest first. The caller's
-#: key (a provider token plus :func:`shape_key`) fully determines the
-#: output schema, so repeated claims of one query shape skip the
-#: Catalyst analysis round-trips entirely. Hits move to the end; at
-#: the cap the least recently used entry goes.
+#: (applicationId, cache_key) -> StructType, or None when analysis
+#: failed, oldest first. The caller's key (a provider token plus
+#: :func:`shape_key`) fully determines the outcome, so repeated claims
+#: of one query shape skip the Catalyst analysis round-trips entirely —
+#: including a shape Catalyst cannot analyse (a remote-only function).
+#: Hits move to the end; at the cap the least recently used entry goes.
 _CACHE: dict = {}
 _CACHE_MAX = 1024
 
@@ -59,8 +60,8 @@ def infer_plan_schema(spark, plan, cache_key: Optional[str] = None
     """Best-effort output schema of a plan. Returns a pyspark StructType,
     or None when inference is impossible (a scan with no registered
     schema, or a construct the local compiler refuses). ``cache_key``
-    must determine the schema (see :func:`shape_key`); None infers
-    uncached."""
+    must determine the outcome (see :func:`shape_key`); a failure is
+    cached like a schema. None infers uncached."""
     if cache_key is not None:
         # applicationId, not id(spark): a torn-down session's address can
         # be reused by a new allocation, which would serve stale schemas
@@ -71,16 +72,15 @@ def infer_plan_schema(spark, plan, cache_key: Optional[str] = None
         full_key = (app, cache_key)
     else:
         full_key = None
-    if full_key is not None:
-        schema = _CACHE.pop(full_key, None)
-        if schema is not None:
-            _CACHE[full_key] = schema
-            return schema
+    if full_key in _CACHE:
+        schema = _CACHE.pop(full_key)
+        _CACHE[full_key] = schema
+        return schema
     try:
         with _quiet_analysis_errors(spark):
             schema = _ShellCompiler(spark).compile(plan).schema
     except Exception:
-        return None
+        schema = None
     if full_key is not None:
         while len(_CACHE) >= _CACHE_MAX:
             _CACHE.pop(next(iter(_CACHE)), None)

@@ -8,126 +8,147 @@ one partition (src/sql/mod.rs:177 builds a 1-partition plan around the
 executor's stream); its JDBC story relies on the engine connector.
 Spark's JDBC source already gives us range-partitioned reads
 (sources/provider.py:JDBCPartitioning); this module is the same idea
-for ANY engine reachable from worker processes — here DuckDB over a
-shared file (every sandbox/cluster with a shared filesystem), the
-pattern being what Trino calls splits:
+for ANY engine reachable from worker processes, the pattern being what
+Trino calls splits:
 
-    slice i of N:  SELECT * FROM (<federated sql>) q
-                   WHERE (hash(split_col) % N + N) % N = i
+    slice i of N:  SELECT * FROM (<federated sql>) __fed_part
+                   WHERE <engine's hash of split_col, mod N> = i
 
-Hash slicing (vs range bounds) needs no min/max probe, balances skewed
-key distributions, and covers every row exactly once — including NULL
-split keys, which hash to a fixed slice rather than being dropped (the
-classic range-partitioning bug: rows outside [lower, upper] bounds are
-NOT dropped by Spark's JDBC source, but NULLs are).
+:func:`read_slices` is the one slice reader. An engine supplies only
+its slice predicate and a per-slice reader of Arrow record batches;
+DuckDB over a shared file (:func:`read_duckdb_partitioned`) and
+PostgreSQL over libpq (``postgres.read_postgres_partitioned``) are the
+two engines. Hash slicing (vs range bounds) needs no min/max probe,
+balances skewed key distributions, and covers every row exactly once —
+each predicate maps NULL split keys to a fixed slice rather than
+dropping them (the classic range-partitioning bug).
 
-Scale shape: the driver runs only `LIMIT 0` for the Arrow schema; each
-task opens its own READ-ONLY connection, fetches record batches, and
-yields them as pandas frames (Arrow-batched both directions). Result
-size per task ~ |result| / N — pick N so a slice fits task memory.
+Soundness rules, the same for every engine. Slicing re-executes the
+inner SQL once per slice, which is only sound when every execution
+returns the SAME multiset, and the slices' union has no order:
+
+- any LIMIT degrades to ONE slice: a pushed-down LIMIT without a total
+  order may pick different rows on each connection;
+- any ORDER BY degrades to ONE slice: one ordered stream through one
+  task preserves the remote sort, which an N-slice union would destroy;
+- a ``split_col`` absent from the result (an aggregate projected it
+  away) degrades to ONE slice: reductive results are small by
+  construction, and a wrong name costs parallelism, never rows.
+
+The LIMIT and ORDER BY checks are word matches on the SQL text, so an
+identifier containing 'limit' or a subquery-level ORDER BY costs only
+parallelism. Other nondeterminism (random(), now()) is on the caller,
+as with any federated pushdown.
+
+Scale shape: the driver runs only ``LIMIT 0`` for the Arrow schema; each
+task opens its own connection, fetches record batches, and yields them
+as pandas frames (Arrow-batched both directions). Result size per task
+~ |result| / N — pick N so a slice fits task memory.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+import re
+from typing import Callable, Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .provider import SQLExecutor
+from .provider import SQLExecutor, duckdb_table_schema
+
+_LIMIT = re.compile(r"\blimit\b", re.IGNORECASE)
+_ORDER_BY = re.compile(r"\border\s+by\b", re.IGNORECASE)
 
 
-def _slice_sql(sql: str, split_col: str, n_slices: int, i: int) -> str:
-    if n_slices == 1:
-        return sql
+def _duckdb_slice(split_col: str, n: int, i: int) -> str:
     # double-mod: DuckDB's % keeps the dividend's sign; hash() is
     # UBIGINT there, but stay sign-proof for engines with signed hash
+    return f"(hash({split_col}) % {n} + {n}) % {n} = {i}"
+
+
+def _slice_sql(sql: str, split_col: str, n_slices: int, i: int,
+               predicate: Callable[[str, int, int], str] = _duckdb_slice
+               ) -> str:
+    if n_slices == 1:
+        return sql
     return (f"SELECT * FROM ({sql}) __fed_part "
-            f"WHERE (hash({split_col}) % {n_slices} + {n_slices})"
-            f" % {n_slices} = {i}")
+            f"WHERE {predicate(split_col, n_slices, i)}")
 
 
-def read_duckdb_partitioned(spark: SparkSession, database: str, sql: str,
-                            split_col: str, n_slices: int = 32,
-                            batch_rows: int = 65536) -> DataFrame:
-    """Distributed read of ``sql`` from a file-backed DuckDB database:
-    the query runs ``n_slices`` times, once per Spark task, each task
-    keeping only its hash slice of ``split_col``. Equality with the
-    single-stream read is pinned in tests/test_partitioned_read.py.
+def read_slices(spark: SparkSession, sql: str, split_col: str,
+                n_slices: int, predicate: Callable[[str, int, int], str],
+                read: Callable) -> DataFrame:
+    """Distributed read of ``sql``: one Spark task per hash slice of
+    ``split_col``, degraded to one slice by the module's soundness rules.
 
-    ``database`` must be a path visible from every executor (shared
-    filesystem); ``:memory:`` cannot work — a worker's memory DB is
-    empty, and this function rejects it up front.
-
-    When ``split_col`` is not a column of the result (the federated
-    planner produced an aggregate that projected it away), the read
-    degrades to ONE slice: reductive results are small by construction,
-    and a single executor-side stream is still better than a
-    driver-side fetch. The degrade is schema-driven, never silent row
-    loss — a wrong split_col that IS absent can only mean fewer
-    parallel slices, not missing data.
-    """
-    if database == ":memory:":
-        raise ValueError(
-            "partitioned reads need a file-backed database visible to "
-            "executors; :memory: lives only in the driver process")
-    if n_slices < 1:
-        raise ValueError(f"n_slices must be >= 1, got {n_slices}")
-
-    import duckdb
+    ``predicate(split_col, n, i)`` is the engine's SQL condition for
+    slice ``i`` of ``n``. ``read(sql)`` runs a query on a fresh
+    connection and returns a ``pyarrow.RecordBatchReader``; it runs on
+    the driver for the ``LIMIT 0`` schema probe and inside each task for
+    its slice, so it must pickle."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    # driver-side: schema only (LIMIT 0 — no data moves)
-    con = duckdb.connect(database, read_only=True)
-    try:
-        empty = con.execute(
-            f"SELECT * FROM ({sql}) __fed_schema LIMIT 0"
-        ).fetch_arrow_table()
-    finally:
-        con.close()
-    schema = from_arrow_schema(empty.schema)
-    if split_col not in empty.schema.names:
-        n_slices = 1
-    # Hash slicing re-executes the inner SQL once per slice, which is
-    # only sound when every execution returns the SAME multiset. A
-    # pushed-down LIMIT without a total order is the realistic way that
-    # breaks (each connection may pick different rows), so any LIMIT
-    # degrades to one slice — LIMIT results are small by construction,
-    # and a false positive (identifier containing 'limit') costs only
-    # parallelism, never correctness. Other nondeterminism (random(),
-    # now()) is on the caller, as with any federated pushdown.
-    import re
-    if re.search(r"\blimit\b", sql, re.IGNORECASE):
-        n_slices = 1
-    # A pushed-down ORDER BY has its ordering destroyed by an N-slice
-    # union (the slices interleave arbitrarily), so eng.sql('... ORDER
-    # BY ...') would silently return unordered rows (ADVICE r5 — masked
-    # in the oracle gate because the comparator sorts). One ordered
-    # stream through one task preserves the remote sort. Subquery-level
-    # ORDER BYs false-positive here, costing parallelism only — same
-    # contract as the LIMIT degrade above.
-    if re.search(r"\border\s+by\b", sql, re.IGNORECASE):
+    if n_slices < 1:
+        raise ValueError(f"n_slices must be >= 1, got {n_slices}")
+    schema = read(f"SELECT * FROM ({sql}) __fed_schema LIMIT 0") \
+        .read_all().schema
+    if (split_col not in schema.names or _LIMIT.search(sql)
+            or _ORDER_BY.search(sql)):
         n_slices = 1
 
     def run_slices(batches) -> Iterator:
         for pdf in batches:
             for i in pdf["__slice"]:
-                c = duckdb.connect(database, read_only=True)
-                try:
-                    reader = c.execute(
-                        _slice_sql(sql, split_col, n_slices, int(i))
-                    ).fetch_record_batch(batch_rows)
-                    for batch in reader:
-                        yield batch.to_pandas()
-                finally:
-                    c.close()
+                for batch in read(_slice_sql(sql, split_col, n_slices,
+                                             int(i), predicate)):
+                    # object ints keep int64 exact when a batch has NULLs
+                    yield batch.to_pandas(integer_object_nulls=True)
 
     # one slice id per partition EXACTLY, no shuffle: hash-repartition
     # on the id would collide slices into one task (~1/e of tasks empty,
     # stragglers run 2-3 slices serially — measured 3/8 empty at n=8)
     slices = spark.range(0, n_slices, 1, numPartitions=n_slices) \
         .select(F.col("id").cast("int").alias("__slice"))
-    return slices.mapInPandas(run_slices, schema=schema)
+    return slices.mapInPandas(run_slices,
+                              schema=from_arrow_schema(schema))
+
+
+def read_duckdb_partitioned(spark: SparkSession, database: str, sql: str,
+                            split_col: str, n_slices: int = 32,
+                            batch_rows: int = 65536) -> DataFrame:
+    """Distributed read of ``sql`` from a file-backed DuckDB database
+    through :func:`read_slices`: the query runs ``n_slices`` times, once
+    per Spark task, each task keeping only its hash slice of
+    ``split_col`` over its own READ-ONLY connection. Equality with the
+    single-stream read is pinned in tests/test_partitioned_read.py.
+
+    ``database`` must be a path visible from every executor (shared
+    filesystem); ``:memory:`` cannot work — a worker's memory DB is
+    empty, and this function rejects it up front."""
+    if database == ":memory:":
+        raise ValueError(
+            "partitioned reads need a file-backed database visible to "
+            "executors; :memory: lives only in the driver process")
+
+    def read(q: str):
+        import duckdb
+        import pyarrow as pa
+        con = duckdb.connect(database, read_only=True)
+        try:
+            reader = con.execute(q).fetch_record_batch(batch_rows)
+        except BaseException:
+            con.close()
+            raise
+
+        def batches():
+            try:
+                yield from reader
+            finally:
+                con.close()
+        return pa.RecordBatchReader.from_batches(reader.schema, batches())
+
+    return read_slices(spark, sql, split_col, n_slices, _duckdb_slice,
+                       read)
 
 
 class PartitionedDuckDBExecutor(SQLExecutor):
@@ -171,11 +192,7 @@ class PartitionedDuckDBExecutor(SQLExecutor):
         return [r[0] for r in rows]
 
     def get_table_schema(self, spark, table_name: str):
-        from pyspark.sql.pandas.types import from_arrow_schema
-        ref = ".".join(f'"{p}"' for p in table_name.split("."))
-        tbl = self._conn.execute(
-            f"SELECT * FROM {ref} LIMIT 0").fetch_arrow_table()
-        return from_arrow_schema(tbl.schema)
+        return duckdb_table_schema(self._conn, table_name)
 
     def execute(self, spark, sql: str, schema=None):
         import time
@@ -199,7 +216,6 @@ class PartitionedDuckDBExecutor(SQLExecutor):
         only suppress the broadcast hint, never force a bad one; shapes
         that can expand rows (joins, unnest, second FROM anywhere)
         return unknown."""
-        import re
         low = sql.lower()
         if (len(re.findall(r"\bfrom\b", low)) != 1
                 or re.search(r"\bjoin\b|\bunnest\b", low)):

@@ -34,6 +34,7 @@ from __future__ import annotations
 import atexit
 import ctypes
 import datetime as _dt
+import functools
 import os
 import shutil
 import subprocess
@@ -41,7 +42,7 @@ import tempfile
 import uuid
 from typing import Any, Callable, Dict, List, Optional, Tuple
 
-from .provider import SQLExecutor, arrow_to_spark, empty_dataframe
+from .provider import SQLExecutor, arrow_to_spark
 
 # -- libpq via ctypes -------------------------------------------------------
 
@@ -90,9 +91,6 @@ def libpq_available() -> bool:
         return False
 
 
-# OID -> (pyarrow type factory, text -> python converter). Text protocol
-# everywhere; the schema-cast layer coerces Arrow-native values to the
-# plan's expected schema exactly as it does for DuckDB results.
 _TS_RE = None
 
 
@@ -109,26 +107,45 @@ def _pg_ts(s: str) -> _dt.datetime:
     return _dt.datetime.fromisoformat(m.group(1) if m else s)
 
 
-def _oid_map():
+@functools.lru_cache(maxsize=None)
+def _oid_types() -> Dict[Optional[int], tuple]:
+    """Result column OID -> (Arrow wire type, text parser, declared
+    Spark type); key None holds the text default for every other OID.
+    Text protocol everywhere. NUMERIC is arbitrary-precision (SUM(bigint)
+    returns it), which Arrow cannot hold without a fixed scale, so it
+    stays text on the wire — lossless — while tables declare it
+    decimal(38,9) and the schema-cast layer converts."""
     import pyarrow as pa
+    from pyspark.sql import types as T
     return {
-        16: (pa.bool_(), lambda s: s == "t"),
-        20: (pa.int64(), int),
-        21: (pa.int16(), int),
-        23: (pa.int32(), int),
-        700: (pa.float32(), float),
-        701: (pa.float64(), float),
-        1082: (pa.date32(), _dt.date.fromisoformat),
-        1114: (pa.timestamp("us"), _pg_ts),
-        1184: (pa.timestamp("us"), _pg_ts),
-        17: (pa.binary(), lambda s: bytes.fromhex(s[2:])),  # '\x..'
+        16: (pa.bool_(), lambda s: s == "t", T.BooleanType()),
+        20: (pa.int64(), int, T.LongType()),
+        21: (pa.int16(), int, T.ShortType()),
+        23: (pa.int32(), int, T.IntegerType()),
+        700: (pa.float32(), float, T.FloatType()),
+        701: (pa.float64(), float, T.DoubleType()),
+        1082: (pa.date32(), _dt.date.fromisoformat, T.DateType()),
+        1114: (pa.timestamp("us"), _pg_ts, T.TimestampType()),
+        1184: (pa.timestamp("us"), _pg_ts, T.TimestampType()),
+        17: (pa.binary(), lambda s: bytes.fromhex(s[2:]),   # '\x..'
+             T.BinaryType()),
+        1700: (pa.string(), str, T.DecimalType(38, 9)),
+        None: (pa.string(), str, T.StringType()),
     }
 
 
-_OID_SPARK = {16: "boolean", 20: "bigint", 21: "smallint", 23: "int",
-              700: "float", 701: "double", 1082: "date",
-              1114: "timestamp", 1184: "timestamp", 17: "binary",
-              1700: "decimal(38,9)"}
+def _oid_type(oid: int) -> tuple:
+    types = _oid_types()
+    return types.get(oid, types[None])
+
+
+def _arrow_batch(names: List[str], oids: List[int], cols: List[list]):
+    """Parsed query columns as one Arrow batch in their wire types."""
+    import pyarrow as pa
+    types = [_oid_type(o)[0] for o in oids]
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=t) for c, t in zip(cols, types)],
+        schema=pa.schema(list(zip(names, types))))
 
 
 class PostgresConnection:
@@ -175,11 +192,9 @@ class PostgresConnection:
             nrows = pq.PQntuples(res)
             names = [pq.PQfname(res, i).decode() for i in range(ncols)]
             oids = [pq.PQftype(res, i) for i in range(ncols)]
-            conv = _oid_map()
             cols: List[list] = []
             for i in range(ncols):
-                cv: Callable[[str], Any] = (
-                    conv[oids[i]][1] if oids[i] in conv else str)
+                cv: Callable[[str], Any] = _oid_type(oids[i])[1]
                 col = []
                 for r in range(nrows):
                     if pq.PQgetisnull(res, r, i):
@@ -230,19 +245,9 @@ class PostgresExecutor(SQLExecutor):
         import time as _time
         import pyarrow as pa
         t0 = _time.time()
-        names, oids, cols = self.conn.query(sql)
-        nrows = len(cols[0]) if cols else 0
-        self._record(sql, _time.time() - t0, nrows)
-        if nrows == 0 and schema is not None:
-            return empty_dataframe(spark, schema)
-        conv = _oid_map()
-        arrays, fields = [], []
-        for nm, oid, col in zip(names, oids, cols):
-            typ = conv[oid][0] if oid in conv else pa.string()
-            arrays.append(pa.array(col, type=typ))
-            fields.append(pa.field(nm, typ))
-        table = pa.Table.from_arrays(arrays, schema=pa.schema(fields))
-        return arrow_to_spark(spark, table, schema)
+        batch = _arrow_batch(*self.conn.query(sql))
+        self._record(sql, _time.time() - t0, batch.num_rows)
+        return arrow_to_spark(spark, pa.Table.from_batches([batch]), schema)
 
     # -- catalog -----------------------------------------------------------
     def table_names(self) -> List[str]:
@@ -254,19 +259,11 @@ class PostgresExecutor(SQLExecutor):
 
     def get_table_schema(self, spark, table_name: str):
         from pyspark.sql import types as T
-        spark_types = {
-            "boolean": T.BooleanType(), "bigint": T.LongType(),
-            "smallint": T.ShortType(), "int": T.IntegerType(),
-            "float": T.FloatType(), "double": T.DoubleType(),
-            "date": T.DateType(), "timestamp": T.TimestampType(),
-            "binary": T.BinaryType(), "string": T.StringType(),
-            "decimal(38,9)": T.DecimalType(38, 9)}
         q = table_name.replace('"', '""')
         names, oids, _ = self.conn.query(
             f'SELECT * FROM "{q}" LIMIT 0')
-        return T.StructType([
-            T.StructField(n, spark_types[_OID_SPARK.get(o, "string")])
-            for n, o in zip(names, oids)])
+        return T.StructType([T.StructField(n, _oid_type(o)[2])
+                             for n, o in zip(names, oids)])
 
     # -- DML ---------------------------------------------------------------
     def execute_statement(self, spark, sql: str) -> Optional[int]:
@@ -435,103 +432,50 @@ class EphemeralPostgres:
 def read_postgres_partitioned(spark, conninfo: str, sql: str,
                               split_col: str, n_slices: int = 16,
                               batch_rows: int = 65536):
-    """Distributed read of ``sql`` from PostgreSQL: the query runs
-    ``n_slices`` times, once per Spark TASK, each keeping only its
-    hash slice of ``split_col`` — results land on the executors,
-    never the driver (the partitioned.py slice pattern, here with
-    per-task libpq connections and server-side cursors so a slice
-    streams in ``batch_rows`` chunks instead of one PQexec buffer).
+    """Distributed read of ``sql`` from PostgreSQL through the shared
+    slice reader (sources/partitioned.py, which states the soundness
+    rules): per-task libpq connections, and server-side cursors so a
+    slice streams in ``batch_rows`` chunks instead of one PQexec buffer.
 
         slice i of N: WHERE (coalesce(hashtext(CAST(col AS text)), 0)
                              % N + N) % N = i
 
     The double-mod keeps PostgreSQL's signed hashtext non-negative;
-    coalesce pins NULL split keys to slice 0 instead of dropping them
-    (the classic range-partitioning bug). The driver runs only
-    LIMIT 0 for the schema. Same soundness contract as the DuckDB
-    slice reader: any LIMIT or top-level ORDER BY degrades to ONE
-    slice (re-executing per slice could pick different rows / the
-    union destroys the order); a ``split_col`` absent from the result
-    degrades to one slice, never silent row loss. ``conninfo`` must
-    be reachable from executor hosts — a Unix-socket conninfo only
-    works in local mode; use TCP on a real cluster."""
-    import re
+    coalesce pins NULL split keys to slice 0 instead of dropping them.
+    ``conninfo`` must be reachable from executor hosts — a Unix-socket
+    conninfo only works in local mode; use TCP on a real cluster."""
+    from .partitioned import read_slices
 
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
+    def predicate(col: str, n: int, i: int) -> str:
+        q = '"' + col.replace('"', '""') + '"'
+        return (f"(coalesce(hashtext(CAST({q} AS text)), 0) "
+                f"% {n} + {n}) % {n} = {i}")
 
-    if n_slices < 1:
-        raise ValueError(f"n_slices must be >= 1, got {n_slices}")
-    boot = PostgresConnection(conninfo)
-    try:
-        names, oids, _ = boot.query(
-            f"SELECT * FROM ({sql}) __fed_schema LIMIT 0")
-    finally:
-        boot.close()
-    spark_types = {
-        16: T.BooleanType(), 20: T.LongType(), 21: T.ShortType(),
-        23: T.IntegerType(), 700: T.FloatType(), 701: T.DoubleType(),
-        1082: T.DateType(), 1114: T.TimestampType(),
-        1184: T.TimestampType(), 17: T.BinaryType(),
-        1700: T.DecimalType(38, 9)}
-    schema = T.StructType([
-        T.StructField(n, spark_types.get(o, T.StringType()))
-        for n, o in zip(names, oids)])
-    if split_col not in names:
-        n_slices = 1
-    if re.search(r"\blimit\b", sql, re.IGNORECASE) \
-            or re.search(r"\border\s+by\b", sql, re.IGNORECASE):
-        n_slices = 1
+    def read(q: str):
+        import pyarrow as pa
+        conn = PostgresConnection(conninfo)
+        fetch = f"FETCH FORWARD {batch_rows} FROM __fed_cur"
+        try:
+            conn.command("BEGIN")
+            conn.command(f"DECLARE __fed_cur NO SCROLL CURSOR FOR {q}")
+            first = _arrow_batch(*conn.query(fetch))
+        except BaseException:
+            conn.close()
+            raise
 
-    # PostgresConnection.query already types values by OID; NUMERIC
-    # (no Arrow-native width) comes back as text — convert to Decimal
-    # in the task so the DecimalType(38,9) schema holds
-    numeric_cols = [n for n, o in zip(names, oids) if o == 1700]
-    qcol = '"' + split_col.replace('"', '""') + '"'
+        def batches():
+            try:
+                batch = first
+                yield batch
+                while batch.num_rows == batch_rows:
+                    batch = _arrow_batch(*conn.query(fetch))
+                    yield batch
+                conn.command("COMMIT")
+            finally:
+                conn.close()
+        return pa.RecordBatchReader.from_batches(first.schema, batches())
 
-    def _slice_sql(i: int) -> str:
-        if n_slices == 1:
-            return sql
-        return (f"SELECT * FROM ({sql}) __fed_part WHERE "
-                f"(coalesce(hashtext(CAST({qcol} AS text)), 0) "
-                f"% {n_slices} + {n_slices}) % {n_slices} = {i}")
-
-    def run_slices(batches):
-        import decimal as _dec
-
-        import pandas as pd
-        for pdf in batches:
-            for i in pdf["__slice"]:
-                conn = PostgresConnection(conninfo)
-                try:
-                    conn.command("BEGIN")
-                    conn.command(
-                        f"DECLARE __fed_cur NO SCROLL CURSOR FOR "
-                        f"{_slice_sql(int(i))}")
-                    while True:
-                        fnames, _, cols = conn.query(
-                            f"FETCH FORWARD {batch_rows} "
-                            f"FROM __fed_cur")
-                        if not cols or not cols[0]:
-                            break
-                        data = {}
-                        for n, c in zip(fnames, cols):
-                            if n in numeric_cols:
-                                c = [None if v is None
-                                     else _dec.Decimal(v) for v in c]
-                            data[n] = pd.Series(c, dtype="object")
-                        yield pd.DataFrame(data)
-                        if len(cols[0]) < batch_rows:
-                            break
-                    conn.command("COMMIT")
-                finally:
-                    conn.close()
-
-    # one slice id per partition EXACTLY, no shuffle (hash-repartition
-    # would collide slices: ~1/e of tasks empty, stragglers serial)
-    slices = spark.range(0, n_slices, 1, numPartitions=n_slices) \
-        .select(F.col("id").cast("int").alias("__slice"))
-    return slices.mapInPandas(run_slices, schema=schema)
+    return read_slices(spark, sql, split_col, n_slices, predicate, read)
 
 
 class PartitionedPostgresExecutor(PostgresExecutor):

@@ -13,17 +13,24 @@ Concrete executors:
 
 - ``DuckDBExecutor`` — in-process analytic engine over parquet/CSV; returns
   Arrow and enters Spark zero-copy via ``spark.createDataFrame``.
+- ``SQLiteExecutor`` — stdlib sqlite3; cursor columns become Arrow arrays.
 - ``JDBCExecutor`` — any JDBC database via Spark's JDBC source with the
   query pushed down (``option("query", sql)``); supports partitioned reads
   (partitionColumn/lowerBound/upperBound/numPartitions) — a deliberate
   scale improvement over the reference's single-partition remote results
   (src/sql/mod.rs:177).
 - ``SparkSQLExecutor`` — a second SparkSession as the remote engine.
+
+Every driver-side executor that fetches rows itself (DuckDB, SQLite,
+Flight, PostgreSQL) enters Spark the same way: one Arrow table through
+:func:`arrow_to_spark`, coerced afterwards by the plan's schema-cast
+projection.
 """
 
 from __future__ import annotations
 
 import time
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from typing import Any, Callable, Dict, List, Optional, Sequence
 
@@ -204,7 +211,6 @@ class SQLProvider(FederationProvider):
         """
         from ..federation import apply_table_hooks
         from ..plans.nodes import RemoteQueryNode
-        from ..schema_infer import shape_key
         from ..unparser import Unparser
 
         plan, tables = apply_table_hooks(plan)
@@ -218,17 +224,21 @@ class SQLProvider(FederationProvider):
         for t in tables:
             if t.remote is not None and t.remote.sql_query_rewriter is not None:
                 sql = t.remote.sql_query_rewriter(sql)
-        # keyed by THIS provider object, not (name, context): two
-        # same-identity providers over different databases (both
-        # DuckDB ':memory:', say) must not share inferred schemas —
-        # a stale hit would make the cast layer corrupt values silently.
-        # The plan's shape, not base_sql, so fresh literals still hit.
+        return RemoteQueryNode(
+            plan=plan, provider=self, sql=sql, base_sql=base_sql,
+            schema=_expected_schema(plan, self.schema_cache_key(plan)))
+
+    def schema_cache_key(self, plan) -> Optional[str]:
+        """Inferred-schema cache key of a plan this provider claimed,
+        or None when the plan cannot be keyed. Keyed by THIS provider
+        object, not (name, context): two same-identity providers over
+        different databases (both DuckDB ':memory:', say) must not
+        share inferred schemas — a stale hit would make the cast layer
+        corrupt values silently. The plan's shape, not its SQL, so
+        fresh literals still hit."""
+        from ..schema_infer import shape_key
         shape = shape_key(plan)
-        cache_key = (None if shape is None
-                     else f"p{self._cache_token}|{shape}")
-        return RemoteQueryNode(plan=plan, provider=self, sql=sql,
-                               base_sql=base_sql,
-                               schema=_expected_schema(plan, cache_key))
+        return None if shape is None else f"p{self._cache_token}|{shape}"
 
 
 def _expected_schema(plan, cache_key=None):
@@ -240,22 +250,12 @@ def _expected_schema(plan, cache_key=None):
     infers through Catalyst over empty frames (schema_infer). None only
     when no SparkSession is active AND the shape is not a whole table
     (the compiler re-infers at execution time as a backstop)."""
-    from ..expressions import Star
-    from ..plans.nodes import Project, Scan, SubqueryAlias
+    from ..federation import is_star_shell
+    from ..plans.nodes import Scan, SubqueryAlias
 
     node = plan
-    while True:
-        if isinstance(node, SubqueryAlias):
-            node = node.input
-            continue
-        if (isinstance(node, Project) and len(node.projections) == 1
-                and isinstance(node.projections[0], Star)
-                and node.projections[0].table is None
-                and not node.projections[0].replace
-                and not node.projections[0].exclude):
-            node = node.input
-            continue
-        break
+    while isinstance(node, SubqueryAlias) or is_star_shell(node):
+        node = node.input
     if (isinstance(node, Scan) and not node.projection
             and node.table.schema is not None):
         return node.table.schema
@@ -270,6 +270,23 @@ def _expected_schema(plan, cache_key=None):
 # ---------------------------------------------------------------------------
 # Concrete executors
 # ---------------------------------------------------------------------------
+
+def duckdb_table_schema(conn, table_name: str):
+    """Spark schema of a DuckDB table: the Arrow schema of
+    `SELECT * ... LIMIT 0` mapped to Spark types directly — no Spark job,
+    and works for empty remote tables (the reference's mock infers via
+    `limit 1`; LIMIT 0 is enough since Arrow carries the types)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+    ref = ".".join(f'"{p}"' for p in table_name.split("."))
+    return from_arrow_schema(
+        conn.execute(f"SELECT * FROM {ref} LIMIT 0")
+        .fetch_arrow_table().schema)
+
+
+#: Distinct SQL texts whose row counts one DuckDBExecutor remembers for
+#: statistics(); past it the least recently used entry goes.
+_ROW_CACHE_MAX = 1024
+
 
 class DuckDBExecutor(SQLExecutor):
     """DuckDB as a remote engine. Tables are registered as DuckDB views
@@ -293,7 +310,7 @@ class DuckDBExecutor(SQLExecutor):
         self.compute_context = compute_context or database
         self.conn = duckdb.connect(database)
         self._tables: Dict[str, str] = {}
-        self._row_cache: Dict[str, int] = {}
+        self._row_cache: "OrderedDict[str, int]" = OrderedDict()
 
     def register_parquet(self, name: str, path: str):
         self.conn.execute(
@@ -311,16 +328,8 @@ class DuckDBExecutor(SQLExecutor):
         return list(self._tables)
 
     def get_table_schema(self, spark, table_name: str):
-        """Arrow schema of `SELECT * ... LIMIT 0` mapped to Spark types
-        directly — no Spark job, and works for empty remote tables (the
-        reference's mock infers via `limit 1`; LIMIT 0 is enough since
-        Arrow carries the types)."""
         t0 = time.time()
-        ref = ".".join(f'"{p}"' for p in table_name.split("."))
-        tbl = self.conn.execute(
-            f"SELECT * FROM {ref} LIMIT 0").fetch_arrow_table()
-        from pyspark.sql.pandas.types import from_arrow_schema
-        schema = from_arrow_schema(tbl.schema)
+        schema = duckdb_table_schema(self.conn, table_name)
         self._record(f"schema:{table_name}", time.time() - t0)
         return schema
 
@@ -335,14 +344,21 @@ class DuckDBExecutor(SQLExecutor):
         arrow = self.conn.execute(sql).fetch_arrow_table()
         self._record(sql, time.time() - t0, arrow.num_rows)
         self._row_cache[sql] = arrow.num_rows
+        self._row_cache.move_to_end(sql)
+        if len(self._row_cache) > _ROW_CACHE_MAX:
+            self._row_cache.popitem(last=False)
         return arrow_to_spark(spark, arrow, schema)
 
     def statistics(self, sql: str) -> Optional[int]:
         """Cheap statistics hook (reference src/sql/executor.rs:61-63
         fetches these as an optional hint — NEVER by re-executing the
-        plan). We return the exact count if this SQL already ran on this
-        connection, else unknown; no remote work is ever issued here."""
-        return self._row_cache.get(sql)
+        plan). We return the exact count if this SQL ran recently on
+        this connection, else unknown; no remote work is ever issued
+        here."""
+        n = self._row_cache.get(sql)
+        if n is not None:
+            self._row_cache.move_to_end(sql)
+        return n
 
     def insert(self, spark, df, table_ref, mode: str = "append"):
         """INSERT INTO passthrough: ship the DataFrame as one Arrow table
@@ -556,11 +572,26 @@ def _sqlite_affinity(decl):
     return T.DoubleType()       # NUMERIC/DECIMAL affinity
 
 
+def _sqlite_array(values):
+    """One SQLite result column as an Arrow array. A column Arrow cannot
+    type from its values — mixed Python types, or nothing but NULLs —
+    ships as strings."""
+    import pyarrow as pa
+    try:
+        arr = pa.array(values)
+    except pa.ArrowException:
+        arr = None
+    if arr is None or pa.types.is_null(arr.type):
+        arr = pa.array([None if v is None else str(v) for v in values],
+                       pa.string())
+    return arr
+
+
 class SQLiteExecutor(SQLExecutor):
     """SQLite as a remote engine via the stdlib driver — the second live
     engine of the reference's two-engine demo (examples/df-csv-advanced.rs
-    mocks sqlite + postgres). Results come back as rows and enter Spark
-    through createDataFrame with the declared schema."""
+    mocks sqlite + postgres). Results enter Spark as Arrow, one array
+    per cursor column, like every other driver-side executor."""
 
     dialect = "sqlite"
 
@@ -600,32 +631,19 @@ class SQLiteExecutor(SQLExecutor):
 
     def execute(self, spark, sql: str, schema=None):
         """``schema`` is the plan's EXPECTED schema (see DuckDBExecutor).
-        SQLite's wire types follow column affinity, so a computed column
-        can come back as a Python type the expected Spark type rejects
-        (e.g. int where the plan says double) — construct with the
-        expected schema when the values verify, else fall back to native
-        types and let the caller's schema-cast projection coerce."""
+        SQLite types each value, not each column, so every cursor column
+        becomes an Arrow array typed from its values; the caller's
+        schema-cast projection coerces them like any executor's."""
+        import pyarrow as pa
         t0 = time.time()
         cur = self.conn.execute(sql)
         rows = cur.fetchall()
         self._record(sql, time.time() - t0, len(rows))
-        cols = [d[0] for d in cur.description]
-        if schema is not None:
-            if not rows:
-                return empty_dataframe(spark, schema)
-            try:
-                return spark.createDataFrame(rows, schema)
-            except Exception:
-                pass        # type verification failed -> native path
-        if not rows:
-            # createDataFrame cannot infer from zero rows; an all-string
-            # empty frame keeps the column names (the schema-cast layer
-            # fixes types when an expected schema is known upstream)
-            from pyspark.sql import types as T
-            empty = T.StructType(
-                [T.StructField(c, T.StringType()) for c in cols])
-            return empty_dataframe(spark, empty)
-        return spark.createDataFrame(rows, cols)
+        names = [d[0] for d in cur.description]
+        table = pa.Table.from_arrays(
+            [_sqlite_array([r[i] for r in rows]) for i in range(len(names))],
+            names=names)
+        return arrow_to_spark(spark, table, schema)
 
     def execute_statement(self, spark, sql: str):
         """Remote DML (r12 write-back): the statement runs wholly

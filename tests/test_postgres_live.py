@@ -356,7 +356,7 @@ def test_pg_partitioned_read_equals_single_stream(spark, pg):
     """Distributed slice read (per-task libpq connections, server-side
     cursors): N-slice union must equal the single-stream read exactly,
     including NULL split keys (pinned to slice 0, never dropped) and
-    NUMERIC columns (text -> Decimal in the task)."""
+    NUMERIC columns (text on the wire on both read paths)."""
     from datafusion_federation_spark.sources.postgres import (
         read_postgres_partitioned)
     ex = pg.executor(name="pg_part", compute_context="pg:part",

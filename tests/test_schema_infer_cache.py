@@ -282,3 +282,14 @@ def test_builder_agg_plan_claims_with_shape_key(remote):
              .group_by("a").agg(Alias(agg("count", col("b")), "n")))
         federate(b.plan)
     assert len(analyses) == 1
+
+
+def test_failed_inference_is_cached(remote):
+    # string_split is DuckDB-only: Catalyst cannot analyse the claimed
+    # plan, and the query still runs whole on the remote
+    eng, _, _, analyses = remote
+    q = "SELECT a, string_split(s, 'x') AS p FROM t WHERE b > {}"
+    for v in (1, 4):
+        assert sorted(len(r.p) for r in eng.sql(q.format(v)).collect())
+    assert len(analyses) == 1
+    assert list(schema_infer._CACHE.values()) == [None]
